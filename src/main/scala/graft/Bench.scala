@@ -13,10 +13,15 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // persist the COMPLETE artifact too: the driver captures stdout with
     // a bounded tail, which truncates at this battery size — the file is
-    // the authoritative per-query record (override path via env)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/latest.json")
+    // the authoritative per-query record (override path via env). Named
+    // by core count, so a scaling run at fewer cores keeps the main record
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench/latest_c$cpus.json")
     measure(only, outPath, reps)
   }
+
+  /** Spark task threads: SPARK_GRAFT_CPUS, else every available core. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
 
   /** The one-line artifact. `partial=true` marks an in-flight write (the
     * per-query checkpointing below); the final write drops the marker so
@@ -29,7 +34,7 @@ object Bench {
     // total = wall time spent (failures still took their elapsed time)
     val total = results.map(r => math.abs(r._2)).sum
     val p = if (partial) "\"partial\":true," else ""
-    s"""{"metric":"total","value":$total,"unit":"sec",$p"queries":$qs,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec",$p"queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
   }
 
   private def writeArtifact(line: String, outPath: String): Unit =
@@ -79,8 +84,6 @@ object Bench {
     */
   def measure(only: Option[Set[String]], outPath: String, reps: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -123,7 +126,7 @@ object Bench {
     val stdoutLine =
       if (line.length <= 1500) line
       else s"""{"metric":"total","value":$total,"unit":"sec","queries":{},""" +
-        s""""n_queries":${results.size},"queries_file":"$outPath","sf":"$sfDir"}"""
+        s""""n_queries":${results.size},"queries_file":"$outPath","sf":"$sfDir","cpus":$cpus}"""
     println(stdoutLine)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's pagination planner (cmd/root.go:335-386) re-thought for
@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * The reference splits each table into `ceil(count/pageSize)` pages and
   * extracts each page with the "deferred join" trick
   * (`SELECT t.* FROM (SELECT pk ... LIMIT off,n) temp LEFT JOIN t ...`,
-  * cmd/root.go:382) to avoid deep-OFFSET scans. On Spark the equivalent
-  * plan unit is a JDBC partition predicate (`WHERE pk >= lo AND pk < hi`)
-  * — strictly better: each page is an index range scan, no OFFSET at all,
-  * and pages map 1:1 onto Spark tasks. LIMIT/OFFSET predicates remain the
-  * fallback for composite or non-numeric PKs.
+  * cmd/root.go:382). Here every keyed table takes one keyset plan instead:
+  * an ordered key-only scan keeps every `pageSize`-th key as a page
+  * boundary, and each page becomes a seek range on the key
+  * (`key > b(i-1) AND key <= b(i)`) — a JDBC partition predicate, so pages
+  * map 1:1 onto Spark tasks with no OFFSET at all (DELTAS.md §6).
   */
 object Pagination {
 
@@ -28,86 +28,52 @@ object Pagination {
   def pageCount(rows: Long, pageSize: Long): Long =
     math.max(1L, (rows + pageSize - 1) / pageSize)
 
-  /** Range predicates for a numeric PK: one `lo <= pk < hi` slice per page,
-    * bounds spread evenly over [min, max]. These feed
-    * `spark.read.jdbc(url, table, predicates, props)` — one Spark task per
-    * page, parallelism bounded by the scheduler (the reference's
-    * maxParallel semaphore, cmd/root.go:106-117, for free).
-    */
-  def rangePredicates(pk: String, min: Long, max: Long, pages: Int): Array[String] = {
-    require(pages > 0)
-    val span = max - min + 1
-    (0 until pages).map { i =>
-      val lo = min + span * i / pages
-      val hi = min + span * (i + 1) / pages
-      // the kill marker rides every page predicate too (root.go:394):
-      // without it the PROCESSLIST sweep cannot identify numeric-path
-      // page scans, only deferred-join ones
-      if (i == pages - 1) s"$SqlTag $pk >= $lo AND $pk <= $max"
-      else s"$SqlTag $pk >= $lo AND $pk < $hi"
+  /** Keyset page predicates over `pkCols` for boundary keys `bounds`
+    * (each a tuple of rendered SQL literals, ascending): `bounds.size + 1`
+    * pages, the first open below and the last open above, so a key
+    * outside the scanned range still lands in exactly one page. Composite
+    * keys use the expanded OR/AND form of the row comparison, which every
+    * dialect accepts, led by a redundant bound on the first key column
+    * that lets the source seek its index. These feed
+    * `spark.read.jdbc(url, table, predicates, props)` — one scan relation,
+    * one Spark task per page. */
+  def keysetPredicates(pkCols: Seq[String], bounds: Seq[Seq[String]]): Array[String] = {
+    val n = pkCols.size
+    // key vs b: (c1 op b1) OR (c1 = b1 AND c2 op b2) OR ..., where the last
+    // column compares with `last` and the others with `strict`
+    def compare(b: Seq[String], strict: String, last: String): String = {
+      val terms = (0 until n).map { i =>
+        (pkCols.take(i).zip(b).map { case (c, v) => s"$c = $v" } :+
+          s"${pkCols(i)} ${if (i == n - 1) last else strict} ${b(i)}").mkString(" AND ")
+      }
+      if (n == 1) terms.head
+      else s"${pkCols.head} $strict= ${b.head} AND ${terms.mkString("((", ") OR (", "))")}"
+    }
+    val lower = None +: bounds.map(b => Some(compare(b, ">", ">")))
+    val upper = bounds.map(b => Some(compare(b, "<", "<="))) :+ None
+    lower.zip(upper).map { case (lo, hi) =>
+      val range = (lo ++ hi).map(p => s"($p)")
+      s"$SqlTag ${if (range.isEmpty) "1 = 1" else range.mkString(" AND ")}"
     }.toArray
   }
 
-  /** LIMIT-clause dialect for generated page SQL: the source the
-    * reference reads speaks MySQL (`LIMIT off,n`); everything else gets
-    * the ANSI form (`OFFSET … FETCH`), which Derby/PG/Oracle 12c+ all
-    * accept — what makes the page planner testable against an embedded
-    * database. */
-  sealed trait LimitDialect { def clause(offset: Long, n: Long): String }
-  case object MySqlLimit extends LimitDialect {
-    override def clause(offset: Long, n: Long): String = s"LIMIT $offset,$n"
-  }
-  case object AnsiLimit extends LimitDialect {
-    override def clause(offset: Long, n: Long): String =
-      s"OFFSET $offset ROWS FETCH NEXT $n ROWS ONLY"
-  }
-
-  /** Dialect inferred from a JDBC url. */
-  def dialectFor(url: String): LimitDialect =
-    if (url.startsWith("jdbc:mysql")) MySqlLimit else AnsiLimit
-
-  /** LIMIT/OFFSET fallback predicates in the reference's exact shape
-    * (cmd/root.go:381-384), for composite / non-numeric PKs where range
-    * slicing does not apply. Returned as full page SQLs. */
-  def deferredJoinPageSql(table: String, pkCols: Seq[String], pageSize: Long,
-                          totalRows: Long,
-                          dialect: LimitDialect = MySqlLimit): Array[String] = {
-    val keyList = pkCols.mkString(",")
-    val onCond = pkCols.map(c => s"temp.$c = t.$c").mkString(" and ")
-    (0L until pageCount(totalRows, pageSize)).map { p =>
-      s"SELECT $SqlTag t.* FROM (SELECT $keyList FROM $table ORDER BY $keyList " +
-        s"${dialect.clause(p * pageSize, pageSize)}) temp LEFT JOIN $table t ON $onCond"
-    }.toArray
-  }
-
-  /** The same page list as WHERE *predicates* for a single
-    * `spark.read.jdbc(url, table, predicates, props)` call — one scan
-    * relation with one JDBC partition per page, so the plan stays FLAT at
-    * any page count. (The alternative — one DataFrame per page SQL
-    * unioned together — builds an N-deep union whose analysis cost grows
-    * superlinearly; at 10k pages for a 1B-row composite-PK table the
-    * driver chokes before the first byte moves.)
-    *
-    * Each predicate is the deferred join turned inside out: an
-    * EXISTS-correlated membership test against the page's key slice.
-    * Inner key columns are aliased with the collision-proof gm2ps_k
-    * prefix (a bare k0..kn would CAPTURE the correlation if a PK column
-    * were itself named k0, turning the page predicate tautological) so
-    * the unqualified side binds to the OUTER scanned table — the source
-    * database materializes the tiny key slice once per page query and
-    * probes it, the same access path as the reference's LEFT JOIN page
-    * SQL (cmd/root.go:382) without needing to rewrite the FROM clause
-    * Spark owns. */
-  def deferredJoinPredicates(table: String, pkCols: Seq[String], pageSize: Long,
-                             totalRows: Long,
-                             dialect: LimitDialect = MySqlLimit): Array[String] = {
-    val keyList = pkCols.mkString(",")
-    val aliased = pkCols.zipWithIndex.map { case (c, i) => s"$c AS gm2ps_k$i" }.mkString(",")
-    val corr = pkCols.zipWithIndex.map { case (c, i) => s"temp.gm2ps_k$i = $c" }.mkString(" AND ")
-    (0L until pageCount(totalRows, pageSize)).map { p =>
-      s"$SqlTag EXISTS (SELECT 1 FROM (SELECT $aliased FROM $table ORDER BY $keyList " +
-        s"${dialect.clause(p * pageSize, pageSize)}) temp WHERE $corr)"
-    }.toArray
+  /** SQL literal of a key value read as text, by JDBC type: numbers as-is,
+    * strings quoted with `'` doubled (and `\` doubled on MySQL, whose
+    * default sql_mode treats it as an escape), dates and times as JDBC
+    * escapes. None for any other type (binary, floating point, ...). */
+  def keyLiteral(sqlType: Int, mysql: Boolean): Option[String => String] = {
+    import java.sql.Types._
+    sqlType match {
+      case TINYINT | SMALLINT | INTEGER | BIGINT | DECIMAL | NUMERIC => Some(v => v)
+      case CHAR | VARCHAR | LONGVARCHAR | NCHAR | NVARCHAR | LONGNVARCHAR => Some { v =>
+        val quoted = v.replace("'", "''")
+        s"'${if (mysql) quoted.replace("\\", "\\\\") else quoted}'"
+      }
+      case DATE      => Some(v => s"{d '$v'}")
+      case TIME      => Some(v => s"{t '$v'}")
+      case TIMESTAMP => Some(v => s"{ts '$v'}")
+      case _         => None
+    }
   }
 
   /** The deferred-join *operator* itself as a DataFrame transform (the J1
@@ -126,7 +92,7 @@ object Pagination {
     // (no global sort), then row_number to drop the first `offset`. The
     // single-partition window is over ≤ offset+n *key-only* rows, which the
     // LIMIT/OFFSET contract bounds by construction; the scale path for deep
-    // pages is rangePredicates, not this operator.
+    // pages is keysetPredicates, not this operator.
     val rn = row_number().over(Window.orderBy(keys: _*))
     val slice = df.select(keys: _*)
       .orderBy(keys: _*)

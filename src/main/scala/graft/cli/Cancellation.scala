@@ -1,6 +1,6 @@
 package graft.cli
 
-import java.sql.{Connection, Statement}
+import java.sql.Connection
 
 import scala.collection.mutable
 
@@ -14,8 +14,8 @@ import graft.io.StatementRegistry
   * Ctrl-C (cmd/app.go:186-216). Spark's native equivalent is job groups:
   * every pipeline phase runs inside a named, interruptible group, and a
   * single cancel call interrupts all its tasks. On top of that, driver-
-  * side JDBC statements (DDL, catalog probes) register here so cancel
-  * reaches statements that sit outside any Spark task, and `killTagged`
+  * side JDBC statements (DDL, key scans) register in StatementRegistry so
+  * cancel reaches statements that sit outside any Spark task, and `killTagged`
   * reproduces the reference's PROCESSLIST sweep for the source side.
   */
 object Cancellation {
@@ -26,9 +26,6 @@ object Cancellation {
     * (root.go:373,394) — `Pagination.SqlTag` — so the source database can
     * identify in-flight graft queries. */
   val Tag: String = Pagination.SqlTag
-
-  def registerStatement(st: Statement): Unit = StatementRegistry.register(st)
-  def deregisterStatement(st: Statement): Unit = StatementRegistry.deregister(st)
 
   /** Run `body` inside the cancellable job group. */
   def interruptible[A](spark: SparkSession, desc: String)(body: => A): A = {

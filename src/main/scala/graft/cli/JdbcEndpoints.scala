@@ -15,8 +15,8 @@ import graft.types.ColumnMeta
   * Catalyst push the predicates down to MySQL.
   *
   * No MySQL/PG is reachable in this build environment; the catalog
-  * queries, page probes, and both page-read strategies run end to end
-  * against an embedded-Derby information_schema fixture in
+  * queries and the keyset page read run end to end against an
+  * embedded-Derby information_schema fixture in
   * MigrationEndToEndSpec (plus fixture-backed CatalogSource/
   * MigrationSink specs) — only the vendor wire protocols stay untested.
   */
@@ -25,12 +25,6 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
     extends Migration.CatalogSource {
   private val conn = Jdbc.ConnInfo(urlOverride.getOrElse(cfg.src.mysqlJdbcUrl),
     cfg.src.username, cfg.src.password)
-
-  /** Identifier quote for generated probe SQL: backtick on MySQL, the
-    * standard double quote elsewhere (lets the whole catalog+data path
-    * run against an embedded information_schema fixture in tests). */
-  private val qc = if (conn.url.startsWith("jdbc:mysql")) "`" else "\""
-  private def q(id: String): String = s"$qc$id$qc"
 
   private def schemaTable(name: String): DataFrame =
     spark.read.jdbc(conn.url, s"information_schema.$name", conn.props)
@@ -61,39 +55,10 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
           r.get(7).toString.toInt)
       }.toSeq
 
-  /** MySQL types a range-predicate page split is sound for. */
-  private val NumericPkTypes =
-    Set("tinyint", "smallint", "mediumint", "int", "integer", "bigint")
-
-  /** S1 (root.go:389-516): PK-partitioned page read. Range predicates
-    * need the PK's REAL bounds (a MIN/MAX probe, not the row count —
-    * auto-increment keys start at 1, sparse keys leave gaps) and a
-    * verified numeric PK type; everything else takes the reference's
-    * deferred-join page SQLs (prepareSqlStr, root.go:335-386). */
-  override def tableData(table: String): DataFrame = {
-    val pk = primaryKeyCols(table)
-    val pkNumeric = pk.size == 1 && columns(table).exists(c =>
-      c.columnName.equalsIgnoreCase(pk.head) && NumericPkTypes(c.dataType))
-    if (pkNumeric) {
-      val k = pk.head
-      val stats = spark.read.jdbc(conn.url,
-        s"(select ${graft.catalog.Pagination.SqlTag} count(*) c, " +
-          s"min(${q(k)}) mn, max(${q(k)}) mx from ${q(table)}) t",
-        conn.props).collect().head
-      val rows = Option(stats.get(0)).fold(0L)(_.toString.toLong)
-      val mn = Option(stats.get(1)).fold(0L)(_.toString.toLong)
-      val mx = Option(stats.get(2)).fold(0L)(_.toString.toLong)
-      Jdbc.readTable(spark, conn, table, pk, pkIsNumeric = true,
-        rowCount = rows, pkMin = mn, pkMax = mx, pageSize = cfg.pageSize)
-    } else {
-      val stats = spark.read.jdbc(conn.url,
-        s"(select ${graft.catalog.Pagination.SqlTag} count(*) c from ${q(table)}) t",
-        conn.props).collect().head
-      val rows = stats.get(0).toString.toLong
-      Jdbc.readTable(spark, conn, table, pk, pkIsNumeric = false,
-        rowCount = rows, pkMin = 0, pkMax = 0, pageSize = cfg.pageSize)
-    }
-  }
+  /** S1 (root.go:389-516): PK-partitioned page read — the keyset plan of
+    * `Jdbc.readTable`, which needs no count, bounds or type probe. */
+  override def tableData(table: String): DataFrame =
+    Jdbc.readTable(spark, conn, table, primaryKeyCols(table), cfg.pageSize)
 
   /** Custom-SQL extraction (root.go:97-98, 305-309): each configured SQL
     * runs as its own dbtable subquery — its own JDBC partition unit —
@@ -158,22 +123,11 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
       .select(col("trigger_name"), col("action_statement"))
 }
 
-/** PG-side sink: batched-INSERT writes + driver DDL (K1/K2). */
-final class JdbcSink(spark: SparkSession, cfg: GraftConfig) extends Migration.MigrationSink {
-  private val conn = Jdbc.ConnInfo(cfg.dest.pgJdbcUrl, cfg.dest.username, cfg.dest.password)
-  private val ddl = new Jdbc.DdlExecutor(conn)
+/** Target-side DDL and row counts over driver JDBC, shared by both sinks. */
+sealed abstract class JdbcTargetSink(spark: SparkSession, protected val conn: Jdbc.ConnInfo)
+    extends Migration.MigrationSink {
 
-  override def executeDdl(sql: String): Try[Unit] = Try {
-    var err: Throwable = null
-    ddl.execute(Seq(sql))((_, e) => err = e)
-    if (err != null) throw err
-  }
-
-  override def writeTable(table: String, df: DataFrame): Try[Long] = Try {
-    // COPY bulk load, truncate-first (root.go:297,412); row count comes
-    // from the write itself — no second scan of the source
-    Jdbc.writeTableCopy(df, conn, table, truncate = true)
-  }
+  override def executeDdl(sql: String): Try[Unit] = Try(Jdbc.execute(conn, sql))
 
   override def rowCount(table: String): Option[Long] = Try {
     spark.read.jdbc(conn.url, s"""(select count(*) c from "$table") t""", conn.props)
@@ -181,35 +135,32 @@ final class JdbcSink(spark: SparkSession, cfg: GraftConfig) extends Migration.Mi
   }.toOption
 }
 
-/** Portable sink (K1 mode A): batched INSERT through Spark's JDBC writer
-  * — for targets without the PG COPY protocol (and the embedded-Derby
-  * integration test). Same DDL/rowCount surface as JdbcSink. */
-final class JdbcInsertSink(spark: SparkSession, url: String,
-                           user: String, password: String)
-    extends Migration.MigrationSink {
-  private val conn = Jdbc.ConnInfo(url, user, password)
-  private val ddl = new Jdbc.DdlExecutor(conn)
-
-  override def executeDdl(sql: String): Try[Unit] = Try {
-    var err: Throwable = null
-    ddl.execute(Seq(sql))((_, e) => err = e)
-    if (err != null) throw err
-  }
+/** PG-side sink: COPY writes + driver DDL (K1/K2). */
+final class JdbcSink(spark: SparkSession, cfg: GraftConfig)
+    extends JdbcTargetSink(spark,
+      Jdbc.ConnInfo(cfg.dest.pgJdbcUrl, cfg.dest.username, cfg.dest.password)) {
 
   override def writeTable(table: String, df: DataFrame): Try[Long] = Try {
-    // Overwrite mode would silently CREATE a missing target table (with
-    // Spark-inferred DDL); the migration contract is the reference's
-    // (root.go:412): data loads into the table phase 1 created, or the
-    // table is a counted failure
-    if (rowCount(table).isEmpty)
-      throw new IllegalStateException(s"target table $table does not exist")
+    // COPY bulk load, truncate-first (root.go:297,412); row count comes
+    // from the write itself — no second scan of the source
+    Jdbc.writeTableCopy(df, conn, table)
+  }
+}
+
+/** Portable sink (K1 mode A): batched INSERT through Spark's JDBC writer
+  * — for targets without the PG COPY protocol (and the embedded-Derby
+  * integration test). */
+final class JdbcInsertSink(spark: SparkSession, url: String,
+                           user: String, password: String)
+    extends JdbcTargetSink(spark, Jdbc.ConnInfo(url, user, password)) {
+
+  override def writeTable(table: String, df: DataFrame): Try[Long] = Try {
+    // truncate-first (root.go:297) as an explicit statement, then append:
+    // data loads into the table phase 1 created, keeping its DDL, and a
+    // missing table fails here as one counted failure (root.go:412)
+    Jdbc.execute(conn, s"""truncate table "$table"""")
     // the created DDL quotes lowercase identifiers, so the writer must too
-    Jdbc.writeTable(df, conn, s""""$table"""", truncate = true)
+    Jdbc.writeTable(df, conn, s""""$table"""")
     rowCount(table).getOrElse(0L)
   }
-
-  override def rowCount(table: String): Option[Long] = Try {
-    spark.read.jdbc(conn.url, s"""(select count(*) c from "$table") t""", conn.props)
-      .collect().head.get(0).toString.toLong
-  }.toOption
 }

@@ -1,9 +1,10 @@
 package graft.io
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{DriverManager, Statement}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.jdbc.JdbcDialects
 
 import graft.catalog.Pagination
 
@@ -11,10 +12,10 @@ import graft.catalog.Pagination
   * reference's goroutine-per-page extraction (cmd/root.go:389-516) and
   * COPY bulk load (cmd/root.go:408-511).
   *
-  * No live MySQL/PG exists in this environment; the read paths (both PK
-  * page strategies) run against embedded Derby in JdbcReadSpec and the
-  * full phase chain in MigrationEndToEndSpec — only the two vendor wire
-  * protocols are untested offline.
+  * No live MySQL/PG exists in this environment; the keyset page read runs
+  * against embedded Derby in JdbcReadSpec and the full phase chain in
+  * MigrationEndToEndSpec — only the two vendor wire protocols are
+  * untested offline.
   */
 object Jdbc {
 
@@ -27,53 +28,70 @@ object Jdbc {
     }
   }
 
-  /** Page-parallel table read: numeric single-column PK → range predicates
-    * (index range scans, no OFFSET — strictly better than the reference's
-    * deferred join, cmd/root.go:382); composite/non-numeric PK → the
-    * reference's LIMIT/OFFSET deferred-join page SQLs as dbtable
-    * subqueries; no PK → single full scan (root.go:356-359).
-    * One JDBC partition per page = one Spark task per page; concurrent
-    * connections are bounded by the scheduler exactly like the reference's
-    * maxParallel semaphore (root.go:106-117).
+  /** Page-parallel table read (S1, root.go:389-516): one keyset plan for
+    * every keyed table. `pageBounds` takes every `pageSize`-th key of one
+    * ordered key-only scan as a page boundary, and the pages become seek
+    * ranges in ONE `spark.read.jdbc` call — one JDBC partition per page,
+    * so the plan stays flat at any page count and concurrent connections
+    * are bounded by the scheduler exactly like the reference's
+    * maxParallel semaphore (root.go:106-117). No PK, or a key type with
+    * no literal form → one unpaged scan (root.go:356-359).
     */
   def readTable(spark: SparkSession, conn: ConnInfo, table: String,
-                pkCols: Seq[String], pkIsNumeric: Boolean,
-                rowCount: Long, pkMin: Long, pkMax: Long,
-                pageSize: Long): DataFrame = {
-    if (pkCols.isEmpty) {
-      spark.read.jdbc(conn.url, table, conn.props)
-    } else if (pkCols.size == 1 && pkIsNumeric) {
-      val pages = Pagination.pageCount(rowCount, pageSize).toInt
-      spark.read.jdbc(conn.url, table,
-        Pagination.rangePredicates(pkCols.head, pkMin, pkMax, pages), conn.props)
-    } else {
-      // one predicates-array read: every deferred-join page is a WHERE
-      // predicate on a SINGLE scan relation — one JDBC partition per
-      // page, and the plan stays flat at any page count (a union of
-      // per-page DataFrames would grow an N-deep union plan whose
-      // analysis cost explodes at 10k+ pages)
-      spark.read.jdbc(conn.url, table,
-        Pagination.deferredJoinPredicates(table, pkCols, pageSize, rowCount,
-          Pagination.dialectFor(conn.url)),
-        conn.props)
+                pkCols: Seq[String], pageSize: Long): DataFrame = {
+    // quoted as Spark quotes the column list: backticks on MySQL
+    val keys = pkCols.map(JdbcDialects.get(conn.url).quoteIdentifier)
+    pageBounds(conn, table, keys, pageSize) match {
+      case Some(bounds) =>
+        spark.read.jdbc(conn.url, table, Pagination.keysetPredicates(keys, bounds), conn.props)
+      case None => spark.read.jdbc(conn.url, table, conn.props)
     }
   }
+
+  /** Page boundaries as rendered key literals: the keys at ranks pageSize,
+    * 2·pageSize, … of a tagged, ordered, key-only driver scan — except
+    * the last key, whose page above would be empty — so a table of n rows
+    * gets `Pagination.pageCount(n, pageSize)` pages of at most pageSize
+    * rows each, however the keys are spread. On MySQL the scan streams
+    * (fetch size Integer.MIN_VALUE), so the driver holds only the
+    * boundaries. None without a PK or for a key type with no literal form
+    * (`Pagination.keyLiteral`). */
+  private def pageBounds(conn: ConnInfo, table: String, keys: Seq[String],
+                         pageSize: Long): Option[Seq[Seq[String]]] =
+    if (keys.isEmpty) None
+    else withStatement(conn) { st =>
+      val mysql = conn.url.startsWith("jdbc:mysql")
+      if (mysql) st.setFetchSize(Integer.MIN_VALUE)
+      val keyList = keys.mkString(", ")
+      val rs = st.executeQuery(s"SELECT ${Pagination.SqlTag} $keyList FROM $table ORDER BY $keyList")
+      val md = rs.getMetaData
+      val render = keys.indices.map(i => Pagination.keyLiteral(md.getColumnType(i + 1), mysql))
+      if (render.contains(None)) None
+      else {
+        val bounds = Vector.newBuilder[Seq[String]]
+        var rows = 0L
+        while (rs.next()) {
+          rows += 1
+          if (rows % pageSize == 0)
+            bounds += render.zipWithIndex.map { case (r, i) => r.get(rs.getString(i + 1)) }
+        }
+        val all = bounds.result()
+        Some(if (rows > 0 && rows % pageSize == 0) all.init else all)
+      }
+    }
 
   /** Bulk write, mode A: Spark's batched-INSERT JDBC writer with
     * rewriteBatchedStatements — the portable path (works on any JDBC
     * target). Mode B below is the COPY path the reference actually uses.
-    *
-    * `truncate = true` empties the target first (the reference's
-    * pre-migration truncate, root.go:297) via Overwrite + the JDBC
-    * truncate option, which issues TRUNCATE instead of DROP/CREATE so
-    * target DDL survives; `false` appends. */
+    * Appends: the caller empties the table first (JdbcInsertSink issues an
+    * explicit TRUNCATE), since Spark's Overwrite mode drops and re-creates
+    * the table on any dialect it does not know to truncate safely. */
   def writeTable(df: DataFrame, conn: ConnInfo, table: String,
-                 batchSize: Int = 10000, truncate: Boolean = true): Unit = {
+                 batchSize: Int = 10000): Unit = {
     val props = conn.props
     props.setProperty("rewriteBatchedStatements", "true")
     df.write
-      .mode(if (truncate) SaveMode.Overwrite else SaveMode.Append)
-      .option("truncate", truncate)
+      .mode(SaveMode.Append)
       .option("batchsize", batchSize)
       .option("isolationLevel", "READ_COMMITTED")
       .jdbc(conn.url, table, props)
@@ -86,37 +104,29 @@ object Jdbc {
     * the reference's data phase fast; batched INSERT (mode A) stays as
     * the portable fallback. */
   def writeTableCopy(df: DataFrame, conn: ConnInfo, table: String,
-                     truncate: Boolean = true,
                      flushBytes: Int = 64 * 1024): Long = {
-    if (truncate) {
-      // a failed TRUNCATE must fail the write — COPYing after a silently
-      // skipped truncate would append onto stale data on re-runs
-      var err: Throwable = null
-      new DdlExecutor(conn).execute(Seq(s"""truncate table "$table""""))((_, e) => err = e)
-      if (err != null) throw err
-    }
+    // a failed TRUNCATE fails the write — COPYing after a skipped truncate
+    // would append onto stale data on re-runs
+    execute(conn, s"""truncate table "$table"""")
     PgCopyLoad.copyInto(df, table,
       new PgJdbcCopyTransportFactory(conn.url, conn.user, conn.password), flushBytes)
   }
 
   /** DDL side-channel (cmd/tablemeta.go K2): target-side DDL has no
-    * DataFrame form — plain driver JDBC with per-statement failure
-    * counting (the reference's per-phase FailedTotal, root.go:166-209). */
-  class DdlExecutor(conn: ConnInfo) {
-    @volatile var failed: Long = 0L
-    @volatile var succeeded: Long = 0L
+    * DataFrame form — one statement over plain driver JDBC, throwing on
+    * failure so the caller counts it (the reference's per-phase
+    * FailedTotal, root.go:166-209). */
+  def execute(conn: ConnInfo, sql: String): Unit = withStatement(conn)(_.execute(sql))
 
-    def execute(sqls: Seq[String])(onError: (String, Throwable) => Unit = (_, _) => ()): Unit = {
-      var c: Connection = null
-      try {
-        c = DriverManager.getConnection(conn.url, conn.user, conn.password)
-        val st = c.createStatement()
-        StatementRegistry.register(st) // cancellable from the Ctrl-C hook
-        try sqls.foreach { sql =>
-          try { st.execute(sql); succeeded += 1 }
-          catch { case e: Throwable => failed += 1; onError(sql, e) }
-        } finally StatementRegistry.deregister(st)
-      } finally if (c != null) c.close()
-    }
+  /** Runs `f` on a fresh driver-side statement registered in
+    * StatementRegistry for its lifetime, so the Ctrl-C hook can cancel it. */
+  private def withStatement[A](conn: ConnInfo)(f: Statement => A): A = {
+    val c = DriverManager.getConnection(conn.url, conn.user, conn.password)
+    try {
+      val st = c.createStatement()
+      StatementRegistry.register(st)
+      try f(st)
+      finally { StatementRegistry.deregister(st); st.close() }
+    } finally c.close()
   }
 }

@@ -2,7 +2,7 @@ package graft.io
 
 import java.sql.Statement
 
-/** Driver-side JDBC statements in flight (DDL executor, catalog probes):
+/** Driver-side JDBC statements in flight (DDL, page-boundary key scans):
   * registered while executing so a cancel (cli.Cancellation, the Ctrl-C
   * path — reference cmd/app.go:186-216) can reach statements that run
   * outside any Spark task. Executor-side page reads are covered

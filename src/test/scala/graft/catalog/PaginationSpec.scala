@@ -6,6 +6,7 @@ import graft.TestSpark
 class PaginationSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import org.apache.spark.sql.functions.expr
 
   test("pageCount math (root.go:373-381): ceil, and ≥1 page always") {
     assert(Pagination.pageCount(0, 100) == 1)
@@ -15,34 +16,21 @@ class PaginationSpec extends AnyFunSuite {
     assert(Pagination.pageCount(250, 100) == 3)
   }
 
-  test("rangePredicates cover [min,max] with no gaps or overlaps, tagged") {
-    val tagged = Pagination.rangePredicates("id", 0, 999, 4)
+  test("keysetPredicates cover every key exactly once, open at both ends") {
+    val tagged = Pagination.keysetPredicates(Seq("a", "b"),
+      Seq(Seq("1", "2"), Seq("1", "5"), Seq("3", "0")))
     // every page predicate carries the kill marker (root.go:394)
     assert(tagged.forall(_.startsWith(Pagination.SqlTag)))
-    val preds = tagged.map(_.stripPrefix(Pagination.SqlTag).trim)
-    assert(preds.length == 4)
-    assert(preds.head.startsWith("id >= 0"))
-    assert(preds.last == "id >= 750 AND id <= 999")
-    // every value 0..999 matched by exactly one predicate
-    val ranges = preds.map { p =>
-      val nums = "\\d+".r.findAllIn(p).map(_.toLong).toSeq
-      (nums(0), nums(1))
-    }
-    (0L to 999L).foreach { v =>
-      val hits = ranges.zipWithIndex.count { case ((lo, hi), i) =>
-        v >= lo && (if (i == ranges.length - 1) v <= hi else v < hi)
-      }
-      assert(hits == 1, s"value $v matched $hits predicates")
-    }
-  }
-
-  test("deferredJoinPageSql emits the reference's page SQL shape (root.go:382)") {
-    val sqls = Pagination.deferredJoinPageSql("t", Seq("a", "b"), 100, 250)
-    assert(sqls.length == 3)
-    assert(sqls(1) == s"SELECT ${Pagination.SqlTag} t.* FROM (SELECT a,b FROM t ORDER BY a,b " +
-      "LIMIT 100,100) temp LEFT JOIN t t ON temp.a = t.a and temp.b = t.b")
-    // every page SQL carries the kill-marker tag (root.go:394)
-    assert(sqls.forall(_.contains("gomysql2pgspark")))
+    assert(tagged.length == 4)
+    // every (a, b) on a grid wider than the bounds matched by exactly one
+    // page — including keys below the first and above the last bound
+    val grid = (for (a <- -1 to 5; b <- -1 to 6) yield (a, b)).toDF("a", "b")
+    val hits = tagged.map(p => grid.filter(expr(p.stripPrefix(Pagination.SqlTag)))
+      .as[(Int, Int)].collect().toSet)
+    assert(hits.map(_.size).sum == grid.count())
+    assert(hits.reduce(_ ++ _).size == grid.count())
+    assert(hits(0).contains((1, 2)) && !hits(0).contains((1, 3)))
+    assert(hits(3).contains((3, 1)) && hits(3).contains((5, 6)) && hits(0).contains((-1, -1)))
   }
 
   test("deferredJoinPage returns exactly rows [offset, offset+n) in PK order") {

@@ -4,6 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.io.StatementRegistry
 
 class CancellationSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -49,11 +50,11 @@ class CancellationSpec extends AnyFunSuite {
       case ("cancel", _) => cancelled = true; null
       case _             => null
     }
-    Cancellation.registerStatement(st)
+    StatementRegistry.register(st)
     try {
       Cancellation.cancelAll(spark)
       assert(cancelled, "registered statement not cancelled")
-    } finally Cancellation.deregisterStatement(st)
+    } finally StatementRegistry.deregister(st)
   }
 
   test("killTagged sweeps PROCESSLIST for tagged queries (app.go:186-202)") {
@@ -85,7 +86,7 @@ class CancellationSpec extends AnyFunSuite {
   test("generated SQL carries the kill-marker tag (root.go:373,394)") {
     assert(Cancellation.Tag.contains(Cancellation.GroupId))
     assert(graft.catalog.Pagination
-      .deferredJoinPageSql("t", Seq("id"), 10, 25)
-      .forall(_.startsWith(s"SELECT ${Cancellation.Tag} ")))
+      .keysetPredicates(Seq("id"), Seq(Seq("10"), Seq("20")))
+      .forall(_.startsWith(s"${Cancellation.Tag} ")))
   }
 }

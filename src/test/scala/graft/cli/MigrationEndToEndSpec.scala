@@ -3,6 +3,10 @@ package graft.cli
 import java.nio.file.Files
 import java.sql.DriverManager
 
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -10,8 +14,8 @@ import graft.config.{ConnConfig, GraftConfig}
 
 /** The full migration, end to end, against REAL JDBC endpoints on BOTH
   * sides (embedded Derby): an information_schema-shaped fixture database
-  * feeds JdbcCatalogSource (real catalog queries, real page-probe SQL,
-  * real page-predicate reads — both PK strategies), Migration.Runner
+  * feeds JdbcCatalogSource (real catalog queries, real key scans, real
+  * keyset page-predicate reads over single and composite keys), Migration.Runner
   * drives every phase, and rows land in a second Derby database through
   * real DDL + batched INSERT statements. The offline substitute for a
   * live MySQL→PG wire test (SURVEY §7.4 #8): everything except the two
@@ -26,16 +30,26 @@ object MigrationEndToEndSpec {
       val st = c.createStatement()
       sqls.foreach { sql =>
         try st.execute(sql)
-        catch { case _: java.sql.SQLException if sql.startsWith("DROP") => () }
+        catch {
+          // drops of absent objects, and the schema a previous test created
+          case _: java.sql.SQLException
+            if sql.startsWith("DROP") || sql.startsWith("CREATE SCHEMA") => ()
+        }
       }
     } finally c.close()
   }
 
-  def query1(url: String, sql: String): Long = {
+  def query1(url: String, sql: String): Long = rows(url, sql).head.head.toLong
+
+  /** Every row of `sql`, each cell as text, sorted. */
+  def rows(url: String, sql: String): Seq[Seq[String]] = {
     val c = DriverManager.getConnection(url)
     try {
       val rs = c.createStatement().executeQuery(sql)
-      rs.next(); rs.getLong(1)
+      val n = rs.getMetaData.getColumnCount
+      val out = Seq.newBuilder[Seq[String]]
+      while (rs.next()) out += (1 to n).map(i => String.valueOf(rs.getObject(i)))
+      out.result().sortBy(_.mkString("\u0000"))
     } finally c.close()
   }
 }
@@ -70,9 +84,9 @@ class MigrationEndToEndSpec extends AnyFunSuite {
         "VIEW_DEFINITION VARCHAR(256))",
       "CREATE TABLE INFORMATION_SCHEMA.TRIGGERS (TRIGGER_SCHEMA VARCHAR(64), TRIGGER_NAME VARCHAR(64), " +
         "ACTION_STATEMENT VARCHAR(256))",
-      // data tables: single numeric PK (range-predicate path), composite
-      // PK (deferred-join predicate path), and a poison table whose PG
-      // type mapping the target rejects (failure-artifact path)
+      // data tables: single numeric PK, composite PK (both over several
+      // keyset pages), and a poison table whose PG type mapping the
+      // target rejects (failure-artifact path)
       "CREATE TABLE PEOPLE (ID INT NOT NULL PRIMARY KEY, NAME VARCHAR(20) NOT NULL)",
       "CREATE TABLE ORDERS (A INT NOT NULL, B INT NOT NULL, AMT INT NOT NULL, PRIMARY KEY (A, B))",
       "CREATE TABLE BADTAB (ID INT NOT NULL PRIMARY KEY, T VARCHAR(20) NOT NULL)")
@@ -154,5 +168,71 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     runner2.run()
     assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"people\"") == 57L)
     assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"orders\"") == 37L)
+  }
+
+  test("a table failing mid-write is one counted failure; a re-run makes the target equal the source") {
+    setupSource()
+    exec(tgtUrl)("DROP TABLE \"people\"", "DROP TABLE \"orders\"", "DROP TABLE \"badtab\"")
+    val cfg = GraftConfig(src = ConnConfig(database = "test"), pageSize = 10, maxParallel = 4,
+      exclude = Seq("BADTAB"))
+    val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
+    val sink = new JdbcInsertSink(spark, tgtUrl, "", "")
+    // ORDERS dies after writing part of its rows
+    val failing = new Migration.MigrationSink {
+      override def executeDdl(sql: String): Try[Unit] = sink.executeDdl(sql)
+      override def writeTable(table: String, df: DataFrame): Try[Long] =
+        if (table != "orders") sink.writeTable(table, df)
+        else sink.writeTable(table, df.limit(5))
+          .flatMap(_ => Failure(new IllegalStateException("injected: write died mid-table")))
+      override def rowCount(table: String): Option[Long] = sink.rowCount(table)
+    }
+    val flog = new FailureLog(graft.TempScratch.fresh("graft-e2e-fault"))
+    val runner = new Migration.Runner(spark, cfg, source, failing, Some(flog))
+    assert(runner.workList == Seq("ORDERS", "PEOPLE"))
+    runner.tableStructure()
+    runner.tableData()
+    val report = runner.report().collect().map(r =>
+      r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(report("TableStructure") == ((2L, 0L)))
+    assert(report("TableData") == ((2L, 1L)))
+    assert(flog.read(FailureLog.FailedTable) == Seq("ORDERS"))
+    val errors = flog.read(FailureLog.ErrorTableData)
+    assert(errors.size == 1 && errors.head.startsWith("ORDERS"), errors)
+    assert(errors.head.contains("injected"))
+    // the other table completed, the failed one holds a partial write
+    assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"people\"") == 57L)
+    assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"orders\"") == 5L)
+
+    // re-run the data phase alone into the same target: truncate-first
+    // makes it equal to the source row for row, both tables
+    new Migration.Runner(spark, cfg, source, sink).tableData()
+    assert(rows(tgtUrl, "SELECT * FROM \"people\"") == rows(srcUrl, "SELECT * FROM PEOPLE"))
+    assert(rows(tgtUrl, "SELECT * FROM \"orders\"") == rows(srcUrl, "SELECT * FROM ORDERS"))
+  }
+
+  test("INSERT sink keeps the target DDL on a dialect Spark cannot truncate") {
+    // Spark's Overwrite mode truncates only when the dialect says TRUNCATE
+    // does not cascade; for any dialect that does not know (None), it
+    // drops the table and re-creates it from the DataFrame's schema
+    val url = "jdbc:derby:memory:graftnotrunc;create=true"
+    val unknown = new JdbcDialect {
+      override def canHandle(u: String): Boolean = u.startsWith("jdbc:derby:memory:graftnotrunc")
+      override def isCascadingTruncateTable(): Option[Boolean] = None
+    }
+    JdbcDialects.registerDialect(unknown)
+    try {
+      exec(url)("DROP TABLE \"kept\"",
+        "CREATE TABLE \"kept\" (\"id\" INT NOT NULL PRIMARY KEY, \"name\" VARCHAR(20), " +
+          "\"extra\" INT DEFAULT 7)",
+        "INSERT INTO \"kept\" VALUES (99, 'stale', 1)")
+      val sink = new JdbcInsertSink(spark, url, "", "")
+      val df = spark.createDataFrame(Seq((1, "a"), (2, "b"))).toDF("id", "name")
+      assert(sink.writeTable("kept", df) == Success(2L))
+      // the stale row is gone and the column Spark never saw survived
+      assert(rows(url, "SELECT \"id\", \"extra\" FROM \"kept\"") == Seq(Seq("1", "7"), Seq("2", "7")))
+      // a missing target table fails the write instead of being created
+      assert(sink.writeTable("absent", df).isFailure)
+      assert(query1(url, "SELECT COUNT(*) FROM SYS.SYSTABLES WHERE TABLENAME = 'absent'") == 0L)
+    } finally JdbcDialects.unregisterDialect(unknown)
   }
 }
